@@ -12,7 +12,10 @@ import org.apache.spark.sql.SparkSession
   *    this shared VM. Prints one line per query: min / median / samples.
   *  - `runMain graft.BenchExtra explain out_dir suffix q1 q2 ...` — writes
   *    `out_dir/<q>_<suffix>.txt` with the `.explain("formatted")` text of
-  *    each named query (plan capture only; nothing is executed).
+  *    each named query. The query itself is not run, but building it
+  *    runs any eager materialization it performs (the localCheckpoints
+  *    of dedup_jaccard, dupClusters' rounds, native_hash_law), so the
+  *    plans show the post-checkpoint lineage and capture can take long.
   *
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
   * SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_REPEAT (default 3).

@@ -7,6 +7,7 @@ import mallispark.ir.S
 import mallispark.ir.SchemaIR
 import mallispark.ir.SchemaIR.ValidateErr
 import mallispark.compile.{SchemaCompiler, Transform}
+import mallispark.expressions.Explode
 import mallispark.checks.TableChecks
 import mallispark.run.{NestedDocs, SnapshotTable, ValidationJob, WebPages}
 import mallispark.text.{Dedup, Multimodal, Similarity, TextOps}
@@ -1707,13 +1708,9 @@ object SparkEntry {
         .when(id % 4 === 1, F.concat(png, base))
         .when(id % 4 === 2, F.concat(riff, base))
         .otherwise(base)
-      t(s, dir, "documents")
-        // posexplode_OUTER: constant-length window array (never empty) —
-        // a plain posexplode lets InferFiltersFromGenerate rebuild the
-        // whole window transform inside a size() Filter (double work)
-        .select(id, F.posexplode_outer(
-          Multimodal.sampleWindows(bin, n = 3, width = 8))
-          .as(Seq("frame_idx", "frame")))
+      Explode.positional(t(s, dir, "documents"), Seq(id),
+          Multimodal.sampleWindows(bin, n = 3, width = 8),
+          "frame_idx", "frame")
         .select(id, F.col("frame_idx").cast(LongType).as("frame_idx"),
           F.md5(F.hex(F.col("frame"))).as("frame_h"))
         .orderBy("doc_id", "frame_idx")

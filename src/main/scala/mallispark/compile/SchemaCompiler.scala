@@ -5,6 +5,7 @@ import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import mallispark.ir.SchemaIR
 import mallispark.ir.SchemaIR._
+import mallispark.expressions.Explode
 
 /** IR → Catalyst compiler.
   *
@@ -1473,21 +1474,8 @@ object SchemaCompiler {
                    exclude: Set[String] = Set.empty,
                    maskValue: Option[String] = None)(
       implicit ctx: Ctx = Ctx()): DataFrame = {
-    val withErrs = explainDF(ir, df, "__errs", exclude)
-    // explode_OUTER + null-filter, NOT a size(__errs) > 0 pre-filter and
-    // NOT a plain explode: both of those end with a size(<full errors
-    // expression>) Filter below the projection — the explicit filter by
-    // predicate pushdown, the plain explode by InferFiltersFromGenerate
-    // re-deriving it — evaluating the whole errors expression twice per
-    // input row (confirmed in the physical plan; guide §4.4's
-    // duplication, for pure columns). No filter can be inferred from an
-    // outer generate; the null-filter on the generated column drops the
-    // one extra row an errorless input contributes, after the expression
-    // ran once.
-    val exploded = withErrs
-      .select(keyCols.map(F.col) :+
-        F.explode_outer(F.col("__errs")).as("e"): _*)
-      .where(F.col("e").isNotNull)
+    val exploded = Explode.computed(explainDF(ir, df, "__errs", exclude),
+      keyCols.map(F.col), F.col("__errs"), "e")
     val valueCol = maskValue match {
       case Some(m) => F.when(F.col("e.value").isNotNull, F.lit(m))
         .otherwise(F.lit(null).cast(StringType))

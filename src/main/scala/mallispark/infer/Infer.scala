@@ -5,6 +5,7 @@ import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import mallispark.ir.SchemaIR
 import mallispark.ir.SchemaIR._
+import mallispark.expressions.Explode
 
 /** Schema inference from data — the `malli.provider` analogue
   * (reference: /root/reference/src/malli/provider.cljc:14-111).
@@ -140,7 +141,7 @@ object Infer {
     // materialize the per-key counts once: the totals aggregate AND the
     // fixed-key collect below both consume them (the collect otherwise
     // re-runs the whole explode+groupBy)
-    val keyRows = df.select(F.explode(F.map_keys(F.col(name))).as("k"))
+    val keyRows = Explode.computed(df, Nil, F.map_keys(F.col(name)), "k")
       .groupBy("k").agg(F.count(F.lit(1)).as("kc"))
       .localCheckpoint(true)
     val ks = stats(keyRows)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import mallispark.ir.SchemaIR
 import mallispark.compile.SchemaCompiler
+import mallispark.expressions.Explode
 
 /** The validation job: per-row verdicts + violation rows + per-partition
   * pass/fail manifest with resume (north rule, SURVEY §7 M4).
@@ -175,12 +176,12 @@ object ValidationJob {
                      keyCol: String, payload: Column, freqCol: String)(
       implicit ctx: SchemaCompiler.Ctx = SchemaCompiler.Ctx()): DataFrame = {
     val flagged = SchemaCompiler.validateDF(schema, curr, "valid")
-    val verdicts = flagged.agg(
-      F.count(F.lit(1)).as("rows"),
-      F.sum(F.when(F.col("valid"), 1L).otherwise(0L)).as("valid_rows"))
-      .select(F.explode(F.map(
+    val verdicts = Explode.computed(flagged.agg(
+        F.count(F.lit(1)).as("rows"),
+        F.sum(F.when(F.col("valid"), 1L).otherwise(0L)).as("valid_rows")),
+      Nil, F.map(
         F.lit("rows_total"), F.col("rows"),
-        F.lit("rows_valid"), F.col("valid_rows"))).as(Seq("metric", "value")))
+        F.lit("rows_valid"), F.col("valid_rows")), "metric", "value")
     val viols = SchemaCompiler.violationsDF(schema, curr, Seq(keyCol))
       .groupBy(F.concat(F.lit("viol:"), F.col("error_key")).as("metric"))
       .agg(F.count(F.lit(1)).as("value"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import TextOps._
+import mallispark.expressions.Explode
 
 /** Deduplication operators for web-scale corpora.
   *
@@ -28,13 +29,11 @@ object Dedup {
   val DefaultMaxMembers: Int = 10000
 
   /** Bounded sorted member list — `slice(sort_array(collect_list(id)),1,k)`
-    * semantics with O(k) aggregation state. Ids must be INTEGRAL (the
-    * bounded heap is a long heap; output is array<bigint> regardless of
-    * the input's integral width) — map string/UUID ids to a numeric
-    * surrogate before deduping. */
-  private def memberIds(id: String, maxMembers: Int): Column =
-    mallispark.expressions.BoundedCollectMin(
-      F.col(id).cast(LongType), maxMembers)
+    * semantics with O(k) aggregation state. Ids must be INTEGRAL
+    * (`longId`: the bounded heap is a long heap; output is array<bigint>
+    * regardless of the input's integral width). */
+  private def memberIds(df: DataFrame, id: String, maxMembers: Int): Column =
+    mallispark.expressions.BoundedCollectMin(longId(df, id), maxMembers)
 
   /** Exact duplicate groups by md5(text): (text_hash, dup_cnt, doc_ids).
     * `doc_ids` holds the `maxMembers` smallest ids; `dup_cnt` is always
@@ -44,7 +43,7 @@ object Dedup {
     df.select(F.col(id), F.md5(F.col(text)).as("text_hash"))
       .groupBy("text_hash")
       .agg(F.count(F.lit(1)).as("dup_cnt"),
-        memberIds(id, maxMembers).as("doc_ids"))
+        memberIds(df, id, maxMembers).as("doc_ids"))
       .where(F.col("dup_cnt") > 1)
 
   /** Modulus for the affine MinHash family: 2^61 - 1 (Mersenne prime).
@@ -117,17 +116,10 @@ object Dedup {
       if (shiftNonneg) F.transform(raw, x => F.pmod(x, F.lit(Long.MaxValue)))
       else raw
     }
-    // explode_OUTER: the band array has constant length `bands` ≥ 1, so
-    // outer explode emits identical rows — but a plain explode lets
-    // InferFiltersFromGenerate add a size(<band transform>) Filter below
-    // the projection, re-running the per-band key folds (and, when the
-    // signature is computed in the same projection, the text kernel) a
-    // second time per row
-    sig.where(F.element_at(F.col("sig"), 1) =!= Long.MaxValue)
-      .select(F.col(id), F.explode_outer(
+    val shingled = sig.where(F.element_at(F.col("sig"), 1) =!= Long.MaxValue)
+    Explode.computed(shingled, Seq(F.col(id)),
         F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), b =>
-          F.struct(b.as("band"),
-            bandKey(slice(b)).as("band_key")))).as("bk"))
+          F.struct(b.as("band"), bandKey(slice(b)).as("band_key"))), "bk")
       .select(F.col(id), F.col("bk.band").as("band"),
         F.col("bk.band_key").as("band_key"))
   }
@@ -138,7 +130,7 @@ object Dedup {
     minhashBands(df, id, text, k, bands, n)
       .groupBy("band", "band_key")
       .agg(F.count(F.lit(1)).as("dup_cnt"),
-        memberIds(id, maxMembers).as("doc_ids"))
+        memberIds(df, id, maxMembers).as("doc_ids"))
       .where(F.col("dup_cnt") > 1)
 
   /** Pack per-bit votes (array of 32 longs) into a 32-bit key: bit i set
@@ -167,8 +159,8 @@ object Dedup {
             1L).otherwise(-1L)))
 
   /** Scale-path MinHash+LSH using the native codegen'd
-    * `MinHashSignature` expression (one xxhash64 state per shingle×seed in
-    * a tight generated loop — no md5, no interpreted HOFs). Same banding
+    * `MinHashFromText` expression (tokenize, shingle and hash in one
+    * generated loop — no md5, no interpreted HOFs). Same banding
     * and bucket-join downstream; NOT DuckDB-portable (use `minhashLSH`
     * for the oracle-checked path). */
   def minhashLSHFast(df: DataFrame, id: String, text: String,
@@ -177,7 +169,7 @@ object Dedup {
     minhashBandsFast(df, id, text, k, bands, n)
       .groupBy("band", "band_key")
       .agg(F.count(F.lit(1)).as("dup_cnt"),
-        memberIds(id, maxMembers).as("doc_ids"))
+        memberIds(df, id, maxMembers).as("doc_ids"))
       .where(F.col("dup_cnt") > 1)
 
   /** 64-bit SimHash (two portable 32-bit halves) per document, via the
@@ -199,16 +191,16 @@ object Dedup {
     // (half, half_key) rows and group once — the per-half groupBy pair
     // ran the SimHash kernel scan twice (once per union branch) for the
     // same result set
-    val halves = simhashDF(df, id, text)
-      .select(F.col(id), F.explode_outer(F.array(
-        F.struct(F.lit("hi").as("half"), F.col("hi").as("half_key")),
-        F.struct(F.lit("lo").as("half"), F.col("lo").as("half_key"))))
-        .as("hk"))
+    val halves = Explode.computed(simhashDF(df, id, text), Seq(F.col(id)),
+        F.array(
+          F.struct(F.lit("hi").as("half"), F.col("hi").as("half_key")),
+          F.struct(F.lit("lo").as("half"), F.col("lo").as("half_key"))),
+        "hk")
       .select(F.col(id), F.col("hk.half").as("half"),
         F.col("hk.half_key").as("half_key"))
     halves.groupBy("half", "half_key")
       .agg(F.count(F.lit(1)).as("dup_cnt"),
-        memberIds(id, maxMembers).as("doc_ids"))
+        memberIds(df, id, maxMembers).as("doc_ids"))
       .where(F.col("dup_cnt") > 1)
       .select("half", "half_key", "dup_cnt", "doc_ids")
   }
@@ -227,12 +219,8 @@ object Dedup {
     * DuckDB oracle applies the identical cap. */
   private def shingleSet(df: DataFrame, id: String, text: String, n: Int,
                          maxShingleDf: Int): DataFrame = {
-    // explode_OUTER + null-filter: a plain explode lets the optimizer
-    // infer a size() Filter that re-runs the shingle HOF chain per row
-    val sh = df.select(F.col(id).as("doc"),
-        F.explode_outer(F.array_distinct(shingles(F.col(text), n)))
-          .as("shingle"))
-      .where(F.col("shingle").isNotNull)
+    val sh = Explode.computed(df, Seq(F.col(id).as("doc")),
+      F.array_distinct(shingles(F.col(text), n)), "shingle")
     if (maxShingleDf <= 0) sh
     else {
       // hot-shingle set is tiny by construction → broadcast anti-join
@@ -267,15 +255,15 @@ object Dedup {
   def simhashFastCandidates(df: DataFrame, id: String, text: String,
                             maxMembers: Int = DefaultMaxMembers): DataFrame = {
     val withSig = simhashFast(df, id, text)
-    val banded = withSig.select(F.col(id), F.explode_outer(F.array(
-      (0 until 4).map(b => F.struct(F.lit(b).as("band"),
-        F.shiftrightunsigned(F.col("sig"), b * 16)
-          .bitwiseAND(F.lit(0xFFFFL)).as("band_key"))): _*)).as("bk"))
+    val banded = Explode.computed(withSig, Seq(F.col(id)), F.array(
+        (0 until 4).map(b => F.struct(F.lit(b).as("band"),
+          F.shiftrightunsigned(F.col("sig"), b * 16)
+            .bitwiseAND(F.lit(0xFFFFL)).as("band_key"))): _*), "bk")
       .select(F.col(id), F.col("bk.band").as("band"),
         F.col("bk.band_key").as("band_key"))
     banded.groupBy("band", "band_key")
       .agg(F.count(F.lit(1)).as("dup_cnt"),
-        memberIds(id, maxMembers).as("doc_ids"))
+        memberIds(df, id, maxMembers).as("doc_ids"))
       .where(F.col("dup_cnt") > 1)
   }
 
@@ -317,17 +305,14 @@ object Dedup {
     * embedding (hyperplane) LSH paths: each bucket row carries its
     * ascending, k-capped member list in `idsCol`; explode it into the
     * ordered pairs (id_a < id_b, guaranteed by the ascending order) and
-    * dedup across buckets. Outer explode + null-filter on the GENERATED
-    * column so the optimizer cannot infer a size() filter that re-runs
-    * the pair transform per row. */
+    * dedup across buckets. */
   private[text] def bucketPairs(buckets: DataFrame,
                                 idsCol: String): DataFrame = {
     val ids = F.col(idsCol)
-    buckets.select(F.explode_outer(
+    Explode.computed(buckets, Nil,
         F.flatten(F.transform(ids, (x, i) =>
           F.transform(F.slice(ids, i + 2, F.size(ids) - i - 1),
-            y => F.struct(x.as("a"), y.as("b")))))).as("p"))
-      .where(F.col("p").isNotNull)
+            y => F.struct(x.as("a"), y.as("b"))))), "p")
       .select(F.col("p.a").as("id_a"), F.col("p.b").as("id_b"))
       .distinct()
   }
@@ -341,17 +326,13 @@ object Dedup {
     * result whenever the LSH recalls every qualifying pair — at
     * threshold t with k/bands rows per band, a qualifying pair misses
     * every band with probability (1-t^(k/bands))^bands (≈2e-6 at t=0.8,
-    * k=16, bands=8), so the exact capped self-join IS the oracle.
-    * Set `portable = true` to generate candidates with the md5 family
-    * instead (bit-identical banding across engines, ~10× dearer). */
+    * k=16, bands=8), so the exact capped self-join IS the oracle. */
   def ngramJaccardWithinBuckets(df: DataFrame, id: String, text: String,
                                 n: Int = 3, threshold: Double = 0.8,
                                 k: Int = 16, bands: Int = 8,
                                 maxShingleDf: Int = 0,
-                                portable: Boolean = false,
                                 maxBucket: Int = 4096,
                                 maxHotBroadcast: Int = 1 << 20,
-                                materialize: Boolean = true,
                                 scaledShingleDf: Option[(Int, Long)] = None)
       : DataFrame = {
     // candidate pairs from ONE pass over the banded signatures: group a
@@ -374,9 +355,7 @@ object Dedup {
     // where one suffices (guide §1.2: fix the pass count first; §5:
     // cache exactly the reused, expensive-to-recompute intermediate).
     // State is per-doc arrays (k longs + distinct-shingle hashes), far
-    // smaller than the text payload it replaces. `materialize = false`
-    // keeps the kernel projection in-plan (recompute per reference) —
-    // used by plan specs that assert the kernel wiring.
+    // smaller than the text payload it replaces.
     //
     // `scaledShingleDf = Some((floor, divisor))` derives the ubiquitous-
     // shingle cap from the corpus itself — max(floor, N/divisor) with N =
@@ -384,40 +363,25 @@ object Dedup {
     // an `observe` metric (Observations complete on an eager
     // localCheckpoint) instead of the caller paying a SEPARATE corpus
     // scan for the count. Overrides `maxShingleDf` when set.
-    val wantScaled = scaledShingleDf.isDefined && materialize
-    val obsOpt =
-      if (wantScaled)
-        Some(org.apache.spark.sql.Observation(obsName("jaccard_corpus_n")))
-      else None
-    val baseCols = Seq(F.col(id).as("doc"),
-        (if (portable)
-          mallispark.expressions.ShingleMinHash(F.col(text), n, k)
-        else
-          mallispark.expressions.MinHashFromText(F.col(text), n, k))
-          .as("sig"),
-        mallispark.expressions.ShingleH60Set(F.col(text), n).as("hs0")) ++
-      (if (wantScaled) Seq((F.length(F.col(text)) > 0).as("len_ok"))
-       else Nil)
-    val baseSel = df.select(baseCols: _*)
-    val base0 = obsOpt.map(o => baseSel.observe(o,
+    val obsOpt = scaledShingleDf.map(_ =>
+      org.apache.spark.sql.Observation(obsName("jaccard_corpus_n")))
+    val baseSel = jaccardKernels(df, id, text, n, k, obsOpt.isDefined)
+    val base = obsOpt.map(o => baseSel.observe(o,
         F.coalesce(F.sum(F.when(F.col("len_ok"), 1L).otherwise(0L)),
           F.lit(0L)).as("n"))).getOrElse(baseSel)
-    val base = if (materialize) base0.localCheckpoint(true) else base0
+      .localCheckpoint(true)
     val effMaxShingleDf = scaledShingleDf match {
-      case Some((floor, div)) if materialize =>
+      case Some((floor, div)) =>
         math.max(floor.toLong,
           obsOpt.get.get("n").asInstanceOf[Long] / div).toInt
-      case Some((floor, div)) => // unmaterialized: pay the explicit count
-        math.max(floor.toLong,
-          df.where(F.length(F.col(text)) > 0).count() / div).toInt
       case None => maxShingleDf
     }
     val bd = bandsFromSig(base.select(F.col("doc"), F.col("sig")), "doc",
-        k, bands, shiftNonneg = !portable)
+        k, bands, shiftNonneg = true)
       .select(F.col("doc"), F.col("band"), F.col("band_key"))
     val buckets = bd.groupBy("band", "band_key")
       .agg(mallispark.expressions.BoundedCollectMin(
-          F.col("doc").cast(LongType), maxBucket + 1).as("ids"),
+          F.col("doc"), maxBucket + 1).as("ids"),
         F.count(F.lit(1)).as("bsz"))
       .observe(obsName("jaccard_lsh_dropped_buckets"),
         F.coalesce(F.sum(F.when(F.col("bsz") > maxBucket, 1L)
@@ -449,8 +413,8 @@ object Dedup {
       if (effMaxShingleDf <= 0)
         hs60.select(F.col("doc"), F.col("hs0").as("hs"))
       else {
-        val exploded = hs60.select(F.col("doc"),
-          F.explode(F.col("hs0")).as("h"))
+        val exploded = Explode.computed(hs60, Seq(F.col("doc")),
+          F.col("hs0"), "h")
         // one pass over the exploded rows; what survives is small
         val hot = exploded.groupBy("h").agg(F.count(F.lit(1)).as("df"))
           .where(F.col("df") > effMaxShingleDf)
@@ -499,6 +463,19 @@ object Dedup {
       .select("id_a", "id_b", "inter", "sz_a", "sz_b", "jaccard")
   }
 
+  /** The one text-kernel projection `ngramJaccardWithinBuckets`
+    * materializes: (doc, native MinHash signature `sig`, 60-bit shingle
+    * set `hs0`), plus the nonempty-text flag `len_ok` when the corpus
+    * size is observed. */
+  private[mallispark] def jaccardKernels(df: DataFrame, id: String,
+                                         text: String, n: Int, k: Int,
+                                         withLen: Boolean): DataFrame =
+    df.select(Seq(longId(df, id).as("doc"),
+        mallispark.expressions.MinHashFromText(F.col(text), n, k).as("sig"),
+        mallispark.expressions.ShingleH60Set(F.col(text), n).as("hs0")) ++
+      (if (withLen) Seq((F.length(F.col(text)) > 0).as("len_ok"))
+       else Nil): _*)
+
   /** Near-dup CLUSTER formation: connected components over verified
     * candidate pairs — the step a dedup pipeline needs after pair
     * generation (keep one representative per component, not per pair).
@@ -522,6 +499,9 @@ object Dedup {
   def dupClusters(pairs: DataFrame, aCol: String, bCol: String,
                   maxIter: Int = 20,
                   maxMembers: Int = DefaultMaxMembers): DataFrame = {
+    // member lists are long heaps: reject non-integral ids before the
+    // first job runs
+    Seq(aCol, bCol).foreach(longId(pairs, _))
     // pairs is typically the OUTPUT of the whole LSH+refine pipeline and
     // is referenced twice below — materialize it once (near-dup pairs
     // are ≪ corpus, so the checkpoint is small at any scale)
@@ -529,12 +509,10 @@ object Dedup {
     // pair list — explode each pair into both orientations — so the
     // whole pair pipeline runs inside the single edges-checkpoint job;
     // the former union-of-two-projections shape needed its own pairs
-    // checkpoint first to avoid running the pipeline twice (outer
-    // explode: the 2-element array is never empty, and a plain explode
-    // would get a size() filter inferred below the projection)
-    val edges = pairs.select(F.explode_outer(F.array(
+    // checkpoint first to avoid running the pipeline twice
+    val edges = Explode.computed(pairs, Nil, F.array(
         F.struct(F.col(aCol).as("a"), F.col(bCol).as("b")),
-        F.struct(F.col(bCol).as("a"), F.col(aCol).as("b")))).as("e"))
+        F.struct(F.col(bCol).as("a"), F.col(aCol).as("b"))), "e")
       .select(F.col("e.a").as("a"), F.col("e.b").as("b"))
       .distinct().localCheckpoint(true)
     // seed labels lazily (id → id over the edge endpoints) — round 1's
@@ -581,7 +559,7 @@ object Dedup {
     // the list is state-bounded: maxMembers smallest ids + full sz
     labels.groupBy(F.col("label").as("cluster_id"))
       .agg(F.count(F.lit(1)).as("sz"),
-        F.array_join(F.transform(memberIds("id", maxMembers),
+        F.array_join(F.transform(memberIds(labels, "id", maxMembers),
           x => x.cast(org.apache.spark.sql.types.StringType)), ",")
           .as("members"))
   }
@@ -601,6 +579,9 @@ object Dedup {
   def dupClustersStar(pairs: DataFrame, aCol: String, bCol: String,
                       maxIter: Int = 25,
                       maxMembers: Int = DefaultMaxMembers): DataFrame = {
+    // member lists are long heaps: reject non-integral ids before the
+    // first job runs
+    Seq(aCol, bCol).foreach(longId(pairs, _))
     // materialize the (usually pipeline-produced) pair list once: it is
     // referenced by the oriented edge set AND the node set below
     val p = pairs.select(F.col(aCol), F.col(bCol)).localCheckpoint(true)
@@ -670,7 +651,7 @@ object Dedup {
       .agg(F.coalesce(F.min("root"), F.first("id")).as("label"))
     labels.groupBy(F.col("label").as("cluster_id"))
       .agg(F.count(F.lit(1)).as("sz"),
-        F.array_join(F.transform(memberIds("id", maxMembers),
+        F.array_join(F.transform(memberIds(labels, "id", maxMembers),
           x => x.cast(org.apache.spark.sql.types.StringType)), ",")
           .as("members"))
   }

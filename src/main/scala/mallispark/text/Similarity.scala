@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import TextOps.h32
+import mallispark.expressions.Explode
 
 /** Approximate-nearest-neighbor search over embedding columns
   * (Array[Float]).
@@ -97,20 +98,11 @@ object Similarity {
     * equal in tests), then explodes with positional indices. */
   private def bucketed(df: DataFrame, idCol: String, vecCol: String,
                        planes: Int, tables: Int, dims: Int): DataFrame =
-    // posexplode_OUTER: the bucket array has constant length `tables`
-    // ≥ 1, so outer explode emits identical rows — a plain posexplode
-    // lets InferFiltersFromGenerate add a size(hyperplane_buckets(vec))
-    // Filter below the projection, running the kernel TWICE per vector
-    // null-vector rows produce a null bucket array (null-in-null-out
-    // kernel) — drop their single outer-explode row so they cannot pool
-    // into one shared (null, null) LSH cell (the plain posexplode
-    // dropped them implicitly; the filter runs on the GENERATED column,
-    // so no kernel re-evaluation is inferable from it)
-    df.select(F.col(idCol),
-        F.posexplode_outer(mallispark.expressions.HyperplaneBuckets(
-          F.col(vecCol), planes, tables, dims)).as(Seq("tbl", "bucket")))
-      .where(F.col("tbl").isNotNull)
-      .select(F.col(idCol), F.col("tbl"), F.col("bucket"))
+    // null vectors give a null bucket array and so no rows: they cannot
+    // pool into one shared (null, null) LSH cell
+    Explode.positional(df, Seq(F.col(idCol)),
+      mallispark.expressions.HyperplaneBuckets(
+        F.col(vecCol), planes, tables, dims), "tbl", "bucket")
 
   /** Embedding-cosine NEAR-DUP pair generation — the embedding analogue
     * of the MinHash-banded text path: hyperplane-LSH bucketed candidate
@@ -133,11 +125,11 @@ object Similarity {
     // explode, the same shape as the Jaccard path) instead of a
     // cell-size pre-join feeding a self-join — one exchange of
     // (tbl, bucket, id), no second shuffle of the banded rows, no join.
-    // Ids must be INTEGRAL (the bounded heap is a long heap), same
-    // restriction the dedup member lists carry.
+    // Ids must be INTEGRAL (`longId`: the bounded heap is a long heap),
+    // same restriction the dedup member lists carry.
     val buckets = b.groupBy("tbl", "bucket")
       .agg(mallispark.expressions.BoundedCollectMin(
-          F.col(idCol).cast(LongType), maxBucket + 1).as("ids"),
+          TextOps.longId(df, idCol), maxBucket + 1).as("ids"),
         F.count(F.lit(1)).as("bsz"))
       .observe(obsName("embedding_lsh_dropped_buckets"),
         F.coalesce(F.sum(F.when(F.col("bsz") > maxBucket, 1L)
@@ -232,8 +224,8 @@ object Similarity {
         .agg(F.max(F.struct(F.col("sim"), (-F.col("cent_id")).as("nc")))
           .as("best"))
         .select(F.col(id), (-F.col("best.nc")).as("cell"))
-      val sums = corpus.join(assigned, id)
-        .select(F.col("cell"), F.posexplode(F.col(vec)).as(Seq("dim", "x")))
+      val sums = Explode.positional(corpus.join(assigned, id),
+          Seq(F.col("cell")), F.col(vec), "dim", "x")
         .groupBy("cell", "dim")
         .agg(F.sum(qint(F.col("x"))).as("s"), F.count(F.lit(1)).as("c"))
         .collect()

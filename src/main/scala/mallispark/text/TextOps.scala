@@ -1,6 +1,6 @@
 package mallispark.text
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 
@@ -19,6 +19,17 @@ object TextOps {
   private val obsSeq = new java.util.concurrent.atomic.AtomicLong()
   private[text] def obsName(prefix: String): String =
     s"${prefix}_${obsSeq.incrementAndGet()}"
+
+  /** `id` as a BIGINT column, the type of every bounded member heap and
+    * candidate-pair id. Fails fast, before any job runs, unless the
+    * column is integral. */
+  private[text] def longId(df: DataFrame, id: String): Column = {
+    val dt = df.schema(id).dataType
+    require(Set[DataType](ByteType, ShortType, IntegerType, LongType)(dt),
+      s"id column `$id` must be integral (tinyint/smallint/int/bigint), " +
+        s"got ${dt.sql}: map non-numeric ids to a numeric surrogate first")
+    F.col(id).cast(LongType)
+  }
 
   /** 32-bit portable hash: first 8 hex chars of md5, as a BIGINT.
     * DuckDB equivalent: ('0x' || substring(md5(s),1,8))::BIGINT. */

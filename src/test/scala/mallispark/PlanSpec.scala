@@ -1,6 +1,8 @@
 package mallispark
 
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, Size}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan, Project}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import mallispark.ir.S
 import mallispark.compile.SchemaCompiler
@@ -145,15 +147,14 @@ class PlanSpec extends SparkSuite {
     assert(!lsh.contains("split(lower("), "shingle tokenization in-plan")
     // the bench query materializes the one-pass kernel projection
     // (localCheckpoint), which hides the expression from the final plan —
-    // assert the wiring on the unmaterialized variant, and that the
-    // materialized bench plan carries no tokenizing HOF chain either
-    val jacWiring = planOf(mallispark.text.Dedup.ngramJaccardWithinBuckets(
+    // assert the wiring on the projection the pipeline materializes, and
+    // that the materialized bench plan carries no tokenizing HOF chain
+    val jacWiring = planOf(mallispark.text.Dedup.jaccardKernels(
       spark.read.parquet(s"$sf/documents.parquet"), "doc_id", "text",
-      n = 3, threshold = 0.9, k = 16, bands = 8, materialize = false))
+      n = 3, k = 16, withLen = false))
     assert(jacWiring.contains("shingle_h60_set"),
       "no h60 kernel in jaccard plan")
-    assert(jacWiring.contains("minhash_from_text") ||
-      jacWiring.contains("shingle_minhash"),
+    assert(jacWiring.contains("minhash_from_text"),
       "no minhash kernel in jaccard plan")
     val jac = planOf(graft.SparkEntry.queries("dedup_jaccard")(spark, sf))
     assert(!jac.contains("split(lower("), "shingle tokenization in-plan")
@@ -267,5 +268,69 @@ class PlanSpec extends SparkSuite {
     // candidate gating present: band_key equi-join appears before any
     // shingle = shingle condition in the logical plan
     assert(optimized.contains("band_key"), s"no LSH gate:\n$optimized")
+  }
+
+  /** `size(e)` terms in Filter conditions that re-run a computed array:
+    * `e` is not a column reference and is semantically equal to an
+    * expression some Project or Generate ABOVE the filter computes — the
+    * shape InferFiltersFromGenerate plus predicate pushdown leave when an
+    * array computed in a projection is exploded by a plain generate (or
+    * pre-filtered on its size): the array's expression runs twice per
+    * row. `Explode` exists so that no plan has one. Expressions from
+    * above are rewritten through each Project's aliases on the way down,
+    * as pushdown rewrites the filter it moves. */
+  private def sizeRecomputes(plan: LogicalPlan): Seq[Expression] = {
+    def walk(p: LogicalPlan, above: Seq[Expression]): Seq[Expression] = {
+      val here = p match {
+        case f: Filter => f.condition.collect {
+          case Size(e, _) if !e.isInstanceOf[Attribute] &&
+              above.exists(_.semanticEquals(e)) => e
+        }
+        case _ => Nil
+      }
+      val below = p match {
+        case Project(list, _) =>
+          val aliases = list.collect { case a: Alias => a.exprId -> a.child }
+            .toMap
+          above.map(_.transform {
+            case r: Attribute if aliases.contains(r.exprId) => aliases(r.exprId)
+          }) ++ aliases.values
+        case g: Generate => above ++ g.generator.children
+        case _ => above
+      }
+      here ++ p.children.flatMap(walk(_, below))
+    }
+    walk(plan, Nil)
+  }
+
+  test("no query plan re-runs a computed array inside a size() Filter") {
+    val all = graft.SparkEntry.queries ++ graft.SparkEntry.benchOnlyQueries
+    val t0 = System.nanoTime()
+    val bad = all.toSeq.sortBy(_._1).flatMap { case (name, build) =>
+      sizeRecomputes(build(spark, sf).queryExecution.optimizedPlan)
+        .map(e => s"$name: size(${e.sql.take(160)})").distinct
+    }
+    info(f"swept ${all.size} query plans in " +
+      f"${(System.nanoTime() - t0) / 1e9}%.1f s")
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("the size() sweep flags a plain explode and a size pre-filter") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val h60 = mallispark.expressions.ShingleH60Set(F.col("text"), 3)
+    // InferFiltersFromGenerate infers only from a column input, so the
+    // control explodes the kernel's column, the shape every engine site had
+    val withSet = docs.select(F.col("doc_id"), h60.as("c"))
+    val plainExplode = withSet.select(F.col("doc_id"), F.explode(F.col("c")))
+    val sizePreFilter = withSet.where(F.size(F.col("c")) > 0)
+    Seq(plainExplode, sizePreFilter).foreach { df =>
+      val hits = sizeRecomputes(df.queryExecution.optimizedPlan)
+      assert(hits.nonEmpty && hits.forall(_.sql.contains("shingle_h60_set")),
+        s"control not flagged:\n${df.queryExecution.optimizedPlan}")
+    }
+    // the helper over the same kernel column is clean
+    val helper = mallispark.expressions.Explode.computed(
+      withSet, Seq(F.col("doc_id")), F.col("c"), "h")
+    assert(sizeRecomputes(helper.queryExecution.optimizedPlan).isEmpty)
   }
 }

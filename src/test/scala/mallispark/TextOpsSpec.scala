@@ -84,23 +84,7 @@ class TextOpsSpec extends SparkSuite {
       .count() === 0L)
   }
 
-  test("native MinHashSignature: codegen == interpreted; dups collide") {
-    import mallispark.expressions.MinHashSignature
-    // interpreted eval (via a non-codegen path: eval on literal rows
-    // through collect with codegen off) vs whole-stage codegen
-    val sigDf = d.select(F.col("id"),
-      MinHashSignature(TextOps.shingles(F.col("text"), 2), 16).as("sig"))
-    val withCodegen = sigDf.collect().map(r =>
-      r.getLong(0) -> r.getSeq[Long](1)).toMap
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    val interpreted = try sigDf.collect().map(r =>
-      r.getLong(0) -> r.getSeq[Long](1)).toMap
-    finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    assert(withCodegen === interpreted)
-    assert(withCodegen(1L) === withCodegen(2L)) // exact dups: same signature
-    assert(withCodegen(1L) !== withCodegen(4L))
-    assert(withCodegen(1L).length === 16)
-    // end-to-end fast LSH: dup pair co-bucketed in all bands
+  test("native minhashLSHFast: exact dups co-bucket in every band") {
     val cand = Dedup.minhashLSHFast(d, "id", "text", k = 16, bands = 8, n = 2)
       .collect().map(_.getSeq[Long](3).toSet)
     assert(cand.count(p => p.contains(1L) && p.contains(2L)) === 8)
@@ -372,6 +356,34 @@ class TextOpsSpec extends SparkSuite {
     val open = Similarity.nearDupPairs(emb.toDF(), "id", "v",
       threshold = 0.9, planes = 2, tables = 2, dims = 8, maxBucket = 100)
     assert(open.count() === 20L * 19 / 2)
+  }
+
+  test("string ids fail fast with one clear message on every member-list path") {
+    val sd = d.select(F.col("id").cast(StringType).as("id"), F.col("text"))
+    val pairs = sd.select(F.col("id"), F.col("id").as("id_b"))
+    val emb = spark.range(4).select(F.col("id").cast(StringType).as("id"),
+      F.array_repeat(F.lit(1.0f), 8).as("v"))
+    val calls: Seq[() => Any] = Seq(
+      () => Dedup.exactDupGroups(sd, "id", "text"),
+      () => Dedup.minhashLSH(sd, "id", "text"),
+      () => Dedup.minhashLSHFast(sd, "id", "text"),
+      () => Dedup.simhashCandidates(sd, "id", "text"),
+      () => Dedup.simhashFastCandidates(sd, "id", "text"),
+      () => Dedup.ngramJaccardWithinBuckets(sd, "id", "text"),
+      () => Dedup.dupClusters(pairs, "id", "id_b"),
+      () => Dedup.dupClustersStar(pairs, "id", "id_b"),
+      () => Similarity.nearDupPairs(emb, "id", "v",
+        threshold = 0.9, planes = 2, tables = 2, dims = 8))
+    calls.foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(
+        "id column `id` must be integral (tinyint/smallint/int/bigint), " +
+          "got STRING"), e.getMessage)
+    }
+    // integral ids of any width still work (int ids widen to bigint)
+    val intIds = d.select(F.col("id").cast(IntegerType).as("id"), F.col("text"))
+    assert(Dedup.exactDupGroups(intIds, "id", "text").collect()
+      .map(_.getSeq[Long](2)).toSeq === Seq(Seq(1L, 2L)))
   }
 
   test("dupClustersStar refuses to label from a non-converged forest") {
