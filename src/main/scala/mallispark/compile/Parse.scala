@@ -117,8 +117,7 @@ object Parse {
         if (ctx.depth <= 0) dt
         else parseType(ctx.registry(name), dt)(ctx.copy(depth = ctx.depth - 1))
       case SScoped(local, c, _) =>
-        parseType(c, dt)(ctx.copy(registry =
-          Registry(reg.schemas ++ local, reg.maxDepth)))
+        parseType(c, dt)(ctx.scoped(local))
       case _ => dt // untagged seq-regex at this tier parses element-identical
     }
 
@@ -275,8 +274,7 @@ object Parse {
             .otherwise(F.lit(null).cast(dt))
         else parse(ctx.registry(name), col, dt)(ctx.copy(depth = ctx.depth - 1))
       case SScoped(local, c, _) =>
-        parse(c, col, dt)(ctx.copy(registry =
-          Registry(reg.schemas ++ local, reg.maxDepth)))
+        parse(c, col, dt)(ctx.scoped(local))
 
       // untagged seq-regex over a typed array: every element parse is the
       // element itself at this tier → identity-on-valid
@@ -414,8 +412,7 @@ object Parse {
         if (ctx.depth <= 0) parsed
         else unparse(ctx.registry(name), parsed, dt)(ctx.copy(depth = ctx.depth - 1))
       case SScoped(local, c, _) =>
-        unparse(c, parsed, dt)(ctx.copy(registry =
-          Registry(reg.schemas ++ local, reg.maxDepth)))
+        unparse(c, parsed, dt)(ctx.scoped(local))
       case _ => parsed
     }
 

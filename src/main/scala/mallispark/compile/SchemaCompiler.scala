@@ -5,6 +5,7 @@ import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import mallispark.ir.SchemaIR
 import mallispark.ir.SchemaIR._
+import mallispark.ir.Semantics.{acceptsNull, everyLimit, leafKey}
 import mallispark.expressions.Explode
 
 /** IR → Catalyst compiler.
@@ -162,7 +163,7 @@ object SchemaCompiler {
         .getOrElse(StringType)
       else StringType
     case SScoped(local, c, _) =>
-      dataTypeOfD(c, d)(Registry(reg.schemas ++ local, reg.maxDepth))
+      dataTypeOfD(c, d)(reg.scoped(local))
     case SProps(_, c) => dataTypeOfD(c, d)
     case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
       dataTypeOf(mallispark.ir.SchemaOps.expand(alg, reg))
@@ -235,7 +236,10 @@ object SchemaCompiler {
   // Compiler context
   // --------------------------------------------------------------------
 
-  final case class Ctx(registry: Registry = Registry.empty, depth: Int = 8)
+  final case class Ctx(registry: Registry = Registry.empty, depth: Int = 8) {
+    def scoped(local: Map[String, SchemaIR]): Ctx =
+      copy(registry = registry.scoped(local))
+  }
 
   /** Canonical ISO-8601 string forms for the :time/... kinds that have no
     * Spark physical type (anchored; `java.time` toString/parse shapes). */
@@ -560,7 +564,7 @@ object SchemaCompiler {
             // elements (core.cljc:745-751). NULL is valid like the
             // reference's `(m/validate [:every :int] nil)` — nil is
             // seqable and seqs empty, so only a :min bound can fail it
-            val eff = effectiveEveryLimit(mn, mx, limit)
+            val eff = everyLimit(mn, mx, limit)
             val bounded = F.slice(col, 1, eff)
             F.when(col.isNull, mn.forall(_ <= 0)).otherwise(
               between(F.size(col), mn.map(_.toLong), mx.map(_.toLong)) &&
@@ -613,8 +617,7 @@ object SchemaCompiler {
       // :schema with a local registry: layer the local names over the Ctx
       // registry for the child subtree (local wins — -property-registry)
       case SScoped(local, c, _) =>
-        valid(c, col, dt)(ctx.copy(registry =
-          Registry(ctx.registry.schemas ++ local, ctx.registry.maxDepth)))
+        valid(c, col, dt)(ctx.scoped(local))
 
       // property wrapper: validation ignores non-structural props
       case SProps(_, c) => valid(c, col, dt)
@@ -703,12 +706,6 @@ object SchemaCompiler {
       if (unique) base && F.size(F.array_distinct(col)) === F.size(col) else base
     case _ => F.lit(false)
   }
-
-  /** malli's :every bounded-check window: max(min, max+1, limit)
-    * (core.cljc:745-751). */
-  private def effectiveEveryLimit(mn: Option[Int], mx: Option[Int],
-                                  limit: Int): Int =
-    Seq(Some(limit), mn, mx.map(_ + 1)).flatten.max
 
   /** Struct-shaped `:map` explain over a FIELD ACCESSOR — the errors()
     * twin of [[validStructFields]], same O(width²) rationale. */
@@ -815,32 +812,6 @@ object SchemaCompiler {
       .foldLeft(F.lit(true))(_ && _)
   }
 
-  /** Does the schema accept a null VALUE (vs null meaning missing-key)? */
-  private def acceptsNull(ir: SchemaIR, reg: Registry,
-                          seen: Set[(String, SchemaIR)] = Set.empty)
-      : Boolean = ir match {
-    case SAny | SNil | _: SMaybe => true
-    // nil is a seqable VALUE (seqs empty) — a physical null under these
-    // reads as present-nil, never missing-key; the child itself reports
-    // ::limits when a :min bound needs size
-    case _: SSeqable | _: SEvery => true
-    case SOr(cs) => cs.exists(acceptsNull(_, reg, seen))
-    case SOrn(bs) => bs.exists(b => acceptsNull(b._2, reg, seen))
-    case SAnd(cs) => cs.forall(acceptsNull(_, reg, seen))
-    case SAndn(bs) => bs.forall(b => acceptsNull(b._2, reg, seen))
-    // props/scopes never change nullability — peel (mirrors the
-    // row-level twin)
-    case SProps(_, c) => acceptsNull(c, reg, seen)
-    case SScoped(local, c, _) =>
-      acceptsNull(c, Registry(reg.schemas ++ local, reg.maxDepth), seen)
-    // a ref derefs (a [:ref ...→ :maybe] under a required key accepts a
-    // present-nil); cycle-guarded on the RESOLVED (name, target) like
-    // simpleParser, so shadowed same-name refs are not false cycles
-    case SRef(n) => reg.schemas.get(n).exists(t =>
-      !seen((n, t)) && acceptsNull(t, reg, seen + ((n, t))))
-    case _ => false
-  }
-
   /** True iff the schema's only possible failure on this physical type is
     * null-ness (boundless leaf of a matching type). */
   private def onlyNullCheck(ir: SchemaIR, dt: DataType): Boolean = ir match {
@@ -879,23 +850,7 @@ object SchemaCompiler {
 
     ir match {
       case SAny => emptyViols
-      case SNil => leaf(":nil")
-      case SSome => leaf(":some")
-      case _: SString => leaf(":string")
-      case _: SInt => leaf(":int")
-      case _: SDouble => leaf(":double")
-      case SBoolean => leaf(":boolean")
-      case SBinary => leaf(":bytes")
-      case SUuid => leaf(":uuid")
-      case SIdent(kind, _) => leaf(s":$kind")
-      case _: STimestamp => leaf(":time/instant")
-      case _: SDate => leaf(":time/local-date")
-      case STime(kind, _, _) => leaf(s":time/$kind")
-      case _: SEnum => leaf(":enum")
-      case _: SRegex => leaf(":re")
-      case SCompare(op, _) => leaf(s":$op")
-      case SFn(name, _) => leaf(s":fn/$name")
-      case SCustom(name, _, _) => leaf(name)
+      case l: Leaf => leaf(leafKey(l))
 
       case SValidate(_, f) =>
         // errors come from the fn itself (validate.cljc:31-37): each
@@ -1049,7 +1004,7 @@ object SchemaCompiler {
             val limitsOk = between(F.size(col), mn.map(_.toLong), mx.map(_.toLong))
             val limitsErr = F.when(limitsOk, emptyViols)
               .otherwise(one(path, in, ErrorKeys.Limits, F.size(col).cast(StringType)))
-            val bounded = F.slice(col, 1, effectiveEveryLimit(mn, mx, limit))
+            val bounded = F.slice(col, 1, everyLimit(mn, mx, limit))
             val elemErrs = F.flatten(F.transform(bounded, (x, i) =>
               errors(c, x, et, j(path, "0"), jin(in, i))))
             // NULL is a valid empty seqable — only :min > 0 reports
@@ -1121,8 +1076,7 @@ object SchemaCompiler {
           ctx.copy(depth = ctx.depth - 1))
 
       case SScoped(local, c, _) =>
-        errors(c, col, dt, path, in)(ctx.copy(registry =
-          Registry(ctx.registry.schemas ++ local, ctx.registry.maxDepth)))
+        errors(c, col, dt, path, in)(ctx.scoped(local))
 
       case SProps(_, c) => errors(c, col, dt, path, in)
 
@@ -1371,8 +1325,7 @@ object SchemaCompiler {
     ir match {
       case m: SMap => Some((m, ctx))
       case SProps(_, c) => topMap(c, ctx)
-      case SScoped(local, c, _) => topMap(c, ctx.copy(registry =
-        Registry(ctx.registry.schemas ++ local, ctx.registry.maxDepth)))
+      case SScoped(local, c, _) => topMap(c, ctx.scoped(local))
       case _ => None
     }
 
@@ -1406,8 +1359,7 @@ object SchemaCompiler {
     }
     case SProps(_, c) => structMapDepth(c, dt)
     case SScoped(local, c, _) =>
-      structMapDepth(c, dt)(ctx.copy(registry =
-        Registry(ctx.registry.schemas ++ local, ctx.registry.maxDepth)))
+      structMapDepth(c, dt)(ctx.scoped(local))
     case SMaybe(c) => structMapDepth(c, dt)
     case SAnd(cs) => (0 +: cs.map(structMapDepth(_, dt))).max
     case SOr(cs) => (0 +: cs.map(structMapDepth(_, dt))).max

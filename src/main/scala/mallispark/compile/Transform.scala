@@ -74,8 +74,7 @@ object Transform {
         else decode(ctx.registry(n), col, dt, mode)(
           ctx.copy(depth = ctx.depth - 1))
       case SScoped(local, c, _) =>
-        decode(c, col, dt, mode)(ctx.copy(registry = SchemaIR.Registry(
-          ctx.registry.schemas ++ local, ctx.registry.maxDepth)))
+        decode(c, col, dt, mode)(ctx.scoped(local))
       case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
         decode(SchemaOps.expand(alg, ctx.registry), col, dt, mode)
       case SProps(p, c) =>
@@ -345,8 +344,7 @@ object Transform {
         else decodedType(ctx.registry(n), dt, mode)(
           ctx.copy(depth = ctx.depth - 1))
       case SScoped(local, c, _) =>
-        decodedType(c, dt, mode)(ctx.copy(registry = SchemaIR.Registry(
-          ctx.registry.schemas ++ local, ctx.registry.maxDepth)))
+        decodedType(c, dt, mode)(ctx.scoped(local))
       case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
         decodedType(SchemaOps.expand(alg, ctx.registry), dt, mode)
       case SProps(p, c) =>
@@ -503,8 +501,7 @@ object Transform {
       else encode(ctx.registry(n), col, dt, mode)(
         ctx.copy(depth = ctx.depth - 1))
     case SScoped(local, c, _) =>
-      encode(c, col, dt, mode)(ctx.copy(registry = SchemaIR.Registry(
-        ctx.registry.schemas ++ local, ctx.registry.maxDepth)))
+      encode(c, col, dt, mode)(ctx.scoped(local))
     case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
       encode(SchemaOps.expand(alg, ctx.registry), col, dt, mode)
     case SProps(p, c) =>

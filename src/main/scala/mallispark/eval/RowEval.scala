@@ -1,7 +1,10 @@
 package mallispark.eval
 
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.internal.SQLConf
 import mallispark.ir.SchemaIR
 import mallispark.ir.SchemaIR._
+import mallispark.ir.Semantics.{acceptsNull, errorKey, everyLimit}
 
 /** Row-at-a-time reference interpreter over plain Scala values.
   *
@@ -179,7 +182,7 @@ object RowEval {
               // null value vs missing key: a null-tolerant child still
               // validates it (e.g. [:seqable {:min 1} ...] REJECTS nil)
               e.optional ||
-                (acceptsNull(e.child) && validate(e.child, null))
+                (acceptsNull(e.child, reg) && validate(e.child, null))
             case Some(x) => validate(e.child, x)
           }
         }
@@ -244,7 +247,7 @@ object RowEval {
       if (depth <= 0) true
       else validate(reg(name), v)(reg, depth - 1)
     case SScoped(local, c, _) =>
-      validate(c, v)(Registry(reg.schemas ++ local, reg.maxDepth), depth)
+      validate(c, v)(reg.scoped(local), depth)
     case SProps(_, c) => validate(c, v)
     case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
       validate(mallispark.ir.SchemaOps.expand(alg, reg), v)
@@ -307,8 +310,7 @@ object RowEval {
     case SProps(_, c) if SchemaIR.isRegexOp(c) => reMatchT(c, xs, i, path, df)
     // registry-prop scope: extend the registry, keep splicing
     case SScoped(local, c, false) if SchemaIR.isRegexOp(c) =>
-      reMatchT(c, xs, i, path, df)(
-        Registry(reg.schemas ++ local, reg.maxDepth), depth)
+      reMatchT(c, xs, i, path, df)(reg.scoped(local), depth)
     case SCat(cs) =>
       cs.zipWithIndex.foldLeft(LazyList(i)) { case (ps, (c, idx)) =>
         ps.flatMap(p => reMatchT(c, xs, p, path :+ idx.toString, df))
@@ -370,7 +372,7 @@ object RowEval {
       implicit reg: Registry, depth: Int): LazyList[(Any, Int)] = ir match {
     case SProps(_, c) if SchemaIR.isRegexOp(c) => parseAt(c, xs, i)
     case SScoped(local, c, false) if SchemaIR.isRegexOp(c) =>
-      parseAt(c, xs, i)(Registry(reg.schemas ++ local, reg.maxDepth), depth)
+      parseAt(c, xs, i)(reg.scoped(local), depth)
     case SCat(cs) =>
       cs.foldLeft(LazyList((Vector.empty[Any]: Any, i))) { (ps, c) =>
         ps.flatMap { case (acc, p) => parseAt(c, xs, p).map { case (t, p2) =>
@@ -529,7 +531,7 @@ object RowEval {
         if (depth <= 0) { if (validate(ir, v)) Some(v) else None }
         else parseValue(reg(name), v)(reg, depth - 1)
       case SScoped(local, c, _) =>
-        parseValue(c, v)(Registry(reg.schemas ++ local, reg.maxDepth), depth)
+        parseValue(c, v)(reg.scoped(local), depth)
       case other => if (validate(other, v)) Some(v) else None
     }
 
@@ -678,8 +680,7 @@ object RowEval {
         if (depth <= 0) { if (validate(ir, tree)) Some(tree) else None }
         else unparseValue(reg(name), tree)(reg, depth - 1)
       case SScoped(local, c, _) =>
-        unparseValue(c, tree)(
-          Registry(reg.schemas ++ local, reg.maxDepth), depth)
+        unparseValue(c, tree)(reg.scoped(local), depth)
       case other => if (validate(other, tree)) Some(tree) else None
     }
 
@@ -716,7 +717,7 @@ object RowEval {
       depth: Int = 8): Seq[Any] = ir match {
     case SProps(_, c) if SchemaIR.isRegexOp(c) => reUnparse(c, tree)
     case SScoped(local, c, false) if SchemaIR.isRegexOp(c) =>
-      reUnparse(c, tree)(Registry(reg.schemas ++ local, reg.maxDepth), depth)
+      reUnparse(c, tree)(reg.scoped(local), depth)
     case SCat(cs) =>
       cs.zip(tree.asInstanceOf[Seq[Any]]).flatMap { case (c, t) =>
         reUnparse(c, t) }
@@ -768,7 +769,7 @@ object RowEval {
       implicit reg: Registry, depth: Int): LazyList[Int] = ir match {
     case SProps(_, c) if SchemaIR.isRegexOp(c) => reMatch(c, xs, i)
     case SScoped(local, c, false) if SchemaIR.isRegexOp(c) =>
-      reMatch(c, xs, i)(Registry(reg.schemas ++ local, reg.maxDepth), depth)
+      reMatch(c, xs, i)(reg.scoped(local), depth)
     case SCat(cs) =>
       cs.foldLeft(LazyList(i)) { (ps, c) => ps.flatMap(p => reMatch(c, xs, p)) }
     case SCatn(es) =>
@@ -847,7 +848,7 @@ object RowEval {
       case SRef(n) if fuel > 0 && reg.schemas.contains(n) =>
         step(reg(n), segs, reg, fuel - 1)
       case SScoped(local, c, _) =>
-        step(c, segs, Registry(reg.schemas ++ local, reg.maxDepth), fuel)
+        step(c, segs, reg.scoped(local), fuel)
       case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
         step(mallispark.ir.SchemaOps.expand(alg, reg), segs, reg, fuel)
       case _ => segs match {
@@ -895,7 +896,7 @@ object RowEval {
             m.get(e.key) match {
               case None | Some(null) =>
                 if (e.optional) Vector.empty
-                else if (acceptsNull(e.child))
+                else if (acceptsNull(e.child, reg))
                   explain(e.child, null, path :+ e.key, in :+ e.key)
                 else Vector(Err(path :+ e.key, in :+ e.key,
                   ErrorKeys.MissingKey, null))
@@ -988,8 +989,7 @@ object RowEval {
         if (depth <= 0) Vector.empty
         else explain(reg(name), v, path, in)(reg, depth - 1)
       case SScoped(local, c, _) =>
-        explain(c, v, path, in)(Registry(reg.schemas ++ local, reg.maxDepth),
-          depth)
+        explain(c, v, path, in)(reg.scoped(local), depth)
       case SProps(_, c) => explain(c, v, path, in)
       case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
         explain(mallispark.ir.SchemaOps.expand(alg, reg), v, path, in)
@@ -1023,7 +1023,7 @@ object RowEval {
         }
       case leaf =>
         if (validate(leaf, v)) Vector.empty
-        else Vector(Err(path, in, leafKey(leaf), v))
+        else Vector(Err(path, in, errorKey(leaf), v))
     }
 
   private def collExplain(c: SchemaIR, v: Any, mn: Option[Int], mx: Option[Int],
@@ -1086,57 +1086,6 @@ object RowEval {
     case other => explain(other, x, path, in)
   }
 
-  private[mallispark] def leafKey(ir: SchemaIR): String = ir match {
-    case SProps(_, c) => leafKey(c)
-    case SNil => ":nil"
-    case SSome => ":some"
-    case _: SString => ":string"
-    case _: SInt => ":int"
-    case _: SDouble => ":double"
-    case SBoolean => ":boolean"
-    case SBinary => ":bytes"
-    case SUuid => ":uuid"
-    case SIdent(kind, _) => s":$kind"
-    case _: STimestamp => ":time/instant"
-    case _: SDate => ":time/local-date"
-    case STime(kind, _, _) => s":time/$kind"
-    case _: SEnum => ":enum"
-    case _: SRegex => ":re"
-    case SCompare(op, _) => s":$op"
-    case SFn(n, _) => s":fn/$n"
-    case SCustom(n, _, _) => n
-    case SValidate(n, _) => s":validate/$n"
-    case other => SchemaIR.form(other)
-  }
-
-  /** malli's :every window: max(min, max+1, limit) — core.cljc:745-751. */
-  private def everyLimit(mn: Option[Int], mx: Option[Int], limit: Int): Int =
-    Seq(Some(limit), mn, mx.map(_ + 1)).flatten.max
-
-  /** Does the schema accept a null VALUE (mirror of the compiler's rule). */
-  private def acceptsNull(ir: SchemaIR,
-                          seen: Set[(String, SchemaIR)] = Set.empty)(
-      implicit reg: Registry): Boolean = ir match {
-    case SAny | SNil | _: SMaybe => true
-    // nil is a seqable VALUE: present-nil, never missing-key (the child
-    // still validates it — :min bounds see size 0)
-    case _: SSeqable | _: SEvery => true
-    case SOr(cs) => cs.exists(acceptsNull(_, seen))
-    case SOrn(bs) => bs.exists(b => acceptsNull(b._2, seen))
-    case SAnd(cs) => cs.forall(acceptsNull(_, seen))
-    case SAndn(bs) => bs.forall(b => acceptsNull(b._2, seen))
-    // props/scopes never change nullability — peel (mirrors the compiler)
-    case SProps(_, c) => acceptsNull(c, seen)
-    case SScoped(local, c, _) =>
-      acceptsNull(c, seen)(Registry(reg.schemas ++ local, reg.maxDepth))
-    // a ref derefs (a [:ref ...→ :maybe] under a required key accepts a
-    // present-nil); cycle-guarded on the RESOLVED (name, target) like
-    // simpleParser, so shadowed same-name refs are not false cycles
-    case SRef(n) => reg.schemas.get(n).exists(t =>
-      !seen((n, t)) && acceptsNull(t, seen + ((n, t))))
-    case _ => false
-  }
-
   private def asD(v: Any): Option[Double] = v match {
     case n: Long => Some(n.toDouble)
     case n: Int => Some(n.toDouble)
@@ -1196,13 +1145,13 @@ object RowEval {
       xs.map(jsonish).mkString("[", ",", "]")
     case a: Array[_] => jsonish(a.toSeq)
     // to_json renders container timestamps as ISO-8601 with exactly 3
-    // fraction digits and the session-zone offset (engine-wide UTC →
-    // "Z"), NOT the SQL-cast form errValueString uses for top-level
-    // scalars — match it so hatch-tier violation values are
-    // byte-identical to the Column tier's (NTZ values arrive as
-    // LocalDateTime and render without a zone)
-    case t: java.sql.Timestamp => "\"" + JsonTsFmt.format(t.toInstant) + "\""
-    case i: java.time.Instant => "\"" + JsonTsFmt.format(i) + "\""
+    // fraction digits and the session-zone offset (UTC → "Z"), NOT the
+    // SQL-cast form errValueString uses for top-level scalars — match it
+    // so hatch-tier violation values are byte-identical to the Column
+    // tier's (NTZ values arrive as LocalDateTime and render without a
+    // zone)
+    case t: java.sql.Timestamp => "\"" + jsonTs(t.toInstant) + "\""
+    case i: java.time.Instant => "\"" + jsonTs(i) + "\""
     case l: java.time.LocalDateTime => "\"" + JsonNtzFmt.format(l) + "\""
     // to_json quotes dates as ISO yyyy-MM-dd; String.valueOf would print
     // them UNquoted (java.sql.Date.toString / LocalDate.toString are
@@ -1214,7 +1163,11 @@ object RowEval {
 
   private val JsonTsFmt = java.time.format.DateTimeFormatter
     .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
-    .withZone(java.time.ZoneOffset.UTC)
+  /** In the session time zone, read at call time (a task sees its
+    * session's SQL conf). */
+  private def jsonTs(i: java.time.Instant): String =
+    JsonTsFmt.withZone(DateTimeUtils.getZoneId(
+      SQLConf.get.sessionLocalTimeZone)).format(i)
   private val JsonNtzFmt = java.time.format.DateTimeFormatter
     .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS")
 

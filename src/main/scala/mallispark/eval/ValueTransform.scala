@@ -65,7 +65,7 @@ object ValueTransform {
     case SRef(name) =>
       if (depth <= 0) v else decode(reg(name), v, mode)(reg, depth - 1)
     case SScoped(local, c, _) =>
-      decode(c, v, mode)(Registry(reg.schemas ++ local, reg.maxDepth), depth)
+      decode(c, v, mode)(reg.scoped(local), depth)
     case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
       decode(mallispark.ir.SchemaOps.expand(alg, reg), v, mode)
     case SProps(p, c) =>
@@ -240,8 +240,7 @@ object ValueTransform {
       case SRef(name) =>
         if (depth <= 0) v else encode(reg(name), v, mode)(reg, depth - 1)
       case SScoped(local, c, _) =>
-        encode(c, v, mode)(Registry(reg.schemas ++ local, reg.maxDepth),
-          depth)
+        encode(c, v, mode)(reg.scoped(local), depth)
       case alg @ (_: SMergeOf | _: SUnionOf | _: SSelectKeysOf) =>
         encode(mallispark.ir.SchemaOps.expand(alg, reg), v, mode)
       case SProps(p, c) =>

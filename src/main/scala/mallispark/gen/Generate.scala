@@ -406,7 +406,7 @@ object Generate {
       if (depth > 0) unrollRefs(reg(n), reg, depth - 1)
       else terminate(reg(n), reg)
     case SScoped(l, c, _) =>
-      unrollRefs(c, Registry(reg.schemas ++ l, reg.maxDepth), depth)
+      unrollRefs(c, reg.scoped(l), depth)
     case other => mapChildrenIr(other)(unrollRefs(_, reg, depth))
   }
 
@@ -415,7 +415,7 @@ object Generate {
       s"cannot generate: required recursive path through :ref $n never " +
         "terminates (no finite value satisfies the schema)")
     case SScoped(l, c, _) =>
-      terminate(c, Registry(reg.schemas ++ l, reg.maxDepth))
+      terminate(c, reg.scoped(l))
     case m: SMap => m.copy(
       entries = m.entries.flatMap { e =>
         if (!containsRef(e.child)) Some(e)

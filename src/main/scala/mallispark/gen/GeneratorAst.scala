@@ -157,7 +157,7 @@ object GeneratorAst {
     case SAlt(cs) => ast(SOr(cs), reg, active)
     case SAltn(es) => ast(SOr(es.map(_._2)), reg, active)
     case SScoped(local, c, _) =>
-      ast(c, Registry(reg.schemas ++ local, reg.maxDepth), active)
+      ast(c, reg.scoped(local), active)
     case SRef(name) => active.get(name) match {
       case Some(target) => op("recur", "target" -> (Kw(target): Any))
       case None =>

@@ -28,38 +28,42 @@ object SchemaIR {
 
   // ---- leaves ------------------------------------------------------------
 
+  /** A leaf that reports one error of its own type when it fails (every
+    * leaf but `:any`); its key is `Semantics.leafKey`. */
+  sealed trait Leaf extends SchemaIR
+
   /** `:any` — always valid (core.cljc:821). */
   case object SAny extends SchemaIR
 
   /** `:nil` — value must be null (core.cljc:820). */
-  case object SNil extends SchemaIR
+  case object SNil extends Leaf
 
   /** `:some` — value must be non-null (core.cljc:822). */
-  case object SSome extends SchemaIR
+  case object SSome extends Leaf
 
   /** `:string` with optional `:min`/`:max` LENGTH bounds
     * (core.cljc:823, -min-max-pred 726-736). */
   final case class SString(min: Option[Int] = None, max: Option[Int] = None)
-      extends SchemaIR
+      extends Leaf
 
   /** `:int` / `int?` / `pos-int?` etc. with optional value bounds
     * (core.cljc:824, 2934-2939). 64-bit. */
   final case class SInt(min: Option[Long] = None, max: Option[Long] = None)
-      extends SchemaIR
+      extends Leaf
 
   /** `:double`/`:float`/`number?` with optional value bounds (core.cljc:825-826). */
   final case class SDouble(min: Option[Double] = None, max: Option[Double] = None)
-      extends SchemaIR
+      extends Leaf
 
   /** `:boolean` (core.cljc:827). */
-  case object SBoolean extends SchemaIR
+  case object SBoolean extends Leaf
 
   /** `bytes?` predicate schema (core.cljc:2939) → BinaryType. */
-  case object SBinary extends SchemaIR
+  case object SBinary extends Leaf
 
   /** `:uuid` (core.cljc:832) — string + canonical UUID regex
     * (regex from transform.cljc:115-116). */
-  case object SUuid extends SchemaIR
+  case object SUuid extends Leaf
 
   /** The ident/char predicate leaves — `:keyword` / `:simple-keyword` /
     * `:qualified-keyword` / `:symbol` / `:simple-symbol` /
@@ -75,16 +79,16 @@ object SchemaIR {
     * it exactly; other kinds ignore it (the reference wires the
     * property-pred only into -qualified-keyword-schema). */
   final case class SIdent(kind: String,
-                          ns: Option[String] = None) extends SchemaIR
+                          ns: Option[String] = None) extends Leaf
 
   /** `:time/instant` with `:min`/`:max` range
     * (experimental/time.cljc:85-94, range compare 48-66). */
   final case class STimestamp(min: Option[Instant] = None,
-                              max: Option[Instant] = None) extends SchemaIR
+                              max: Option[Instant] = None) extends Leaf
 
   /** `:time/local-date` (experimental/time.cljc). */
   final case class SDate(min: Option[String] = None, max: Option[String] = None)
-      extends SchemaIR
+      extends Leaf
 
   /** The rest of the `:time/...` family (experimental/time.cljc:85-100):
     * `kind` ∈ duration | period | local-time | local-date-time |
@@ -98,23 +102,23 @@ object SchemaIR {
     * "06:00:00", "2024-01-01T00:00:00"); range compare mirrors the
     * reference's -min-max-pred (time.cljc:48-66). */
   final case class STime(kind: String, min: Option[String] = None,
-                         max: Option[String] = None) extends SchemaIR
+                         max: Option[String] = None) extends Leaf
 
   /** `:enum` — value ∈ literal set (core.cljc:1669-1714, membership 1688-1689). */
-  final case class SEnum(values: Seq[Any]) extends SchemaIR
+  final case class SEnum(values: Seq[Any]) extends Leaf
 
   /** `:re` — regex on strings. malli uses `re-find`, i.e. PARTIAL match
     * (core.cljc:1730-1731): the pattern is NOT auto-anchored. */
-  final case class SRegex(pattern: String) extends SchemaIR
+  final case class SRegex(pattern: String) extends Leaf
 
   /** Comparator schemas `:>` `:>=` `:<` `:<=` `:=` `:not=` against a literal
     * child (core.cljc:2947-2951). */
-  final case class SCompare(op: String, value: Any) extends SchemaIR
+  final case class SCompare(op: String, value: Any) extends Leaf
 
   /** `:fn` — arbitrary predicate; exceptions → false (-safe-pred,
     * core.cljc:209, 1770-1817). Escape hatch: compiles to a Scala UDF
     * (non-codegen, flagged). `name` keys the violation. */
-  final case class SFn(name: String, f: Any => Boolean) extends SchemaIR
+  final case class SFn(name: String, f: Any => Boolean) extends Leaf
 
   /** Custom leaf type — the `-simple-schema` extension point
     * (core.cljc:765-818): a NAMED leaf whose validator is supplied as a
@@ -127,7 +131,7 @@ object SchemaIR {
                            colPred: (org.apache.spark.sql.Column,
                              org.apache.spark.sql.types.DataType) =>
                              org.apache.spark.sql.Column,
-                           rowPred: Any => Boolean) extends SchemaIR
+                           rowPred: Any => Boolean) extends Leaf
 
   /** One custom error returned by a `:validate` function: `in` is the
     * value-path SUFFIX relative to the validated value (spliced after the
@@ -478,7 +482,7 @@ object SchemaIR {
             simpleParser(resolved, reg, seen + ((name, resolved)))
       }
     case SScoped(local, c, _) =>
-      simpleParser(c, Registry(reg.schemas ++ local, reg.maxDepth), seen)
+      simpleParser(c, reg.scoped(local), seen)
     case _ => true // leaves, :fn, :custom, :validate
   }
 
@@ -518,6 +522,10 @@ object SchemaIR {
       schemas.getOrElse(name,
         throw new IllegalArgumentException(s"unknown schema ref: $name"))
     def +(kv: (String, SchemaIR)): Registry = copy(schemas = schemas + kv)
+    /** The registry inside an `SScoped` node: local names win, `maxDepth`
+      * is inherited. */
+    def scoped(local: Map[String, SchemaIR]): Registry =
+      copy(schemas = schemas ++ local)
   }
   object Registry {
     val empty: Registry = Registry(Map.empty)

@@ -152,7 +152,7 @@ object SchemaOps {
     def go(s: SchemaIR, reg: Registry, stack: Set[String]): SchemaIR =
       s match {
         case SScoped(local, c, _) =>
-          go(c, Registry(reg.schemas ++ local, reg.maxDepth), stack)
+          go(c, reg.scoped(local), stack)
         case SRef(n) =>
           if (stack.contains(n) || !reg.schemas.contains(n)) SRef(n)
           else go(reg(n), reg, stack + n)
@@ -172,7 +172,7 @@ object SchemaOps {
       // into it (non-recursive locals resolve fully; recursive ones stay
       // behind :ref as elsewhere)
       case SScoped(local, c, _) if d > 0 =>
-        expand(c, Registry(reg.schemas ++ local, reg.maxDepth), d - 1)
+        expand(c, reg.scoped(local), d - 1)
       // algebra over a props-wrapped map reaches through (the wrapper's
       // non-structural props don't survive a merge — malli's -merge keeps
       // only the LAST map's properties, which the rebuilt SMap mirrors)
@@ -216,8 +216,8 @@ object SchemaOps {
       case SRepeat(c, mn, mx) => SRepeat(go(c, d), mn, mx)
       case SScoped(l, c, b) => SScoped(
         l.map { case (n, s2) =>
-          n -> expand(s2, Registry(reg.schemas ++ l, reg.maxDepth), d) },
-        expand(c, Registry(reg.schemas ++ l, reg.maxDepth), d), b)
+          n -> expand(s2, reg.scoped(l), d) },
+        expand(c, reg.scoped(l), d), b)
       case SProps(p, c) => SProps(p, go(c, d))
       case other => other
     }
@@ -297,10 +297,10 @@ object SchemaOps {
       // a registry-prop scope is transparent even nested; only the
       // explicit [:schema ..] wrapper is a one-element boundary
       case SScoped(local, c, false) =>
-        go(c, nested, Registry(reg.schemas ++ local, reg.maxDepth), seen)
+        go(c, nested, reg.scoped(local), seen)
       case SScoped(local, c, _) =>
         if (nested) (1, Some(1))
-        else go(c, nested, Registry(reg.schemas ++ local, reg.maxDepth), seen)
+        else go(c, nested, reg.scoped(local), seen)
       case SRef(n) =>
         if (seen(n)) throw new IllegalArgumentException(
           s":malli.core/potentially-recursive-seqex $n")

@@ -312,7 +312,7 @@ object Messages {
                     if (negate) "should not be some" else "should be some")
                 case leaf =>
                   val m0 = F.lit(defaults.getOrElse(
-                    mallispark.eval.RowEval.leafKey(leaf), "match"))
+                    mallispark.ir.Semantics.errorKey(leaf), "match"))
                   if (negate) flip(m0) else m0
               }
             }

@@ -29,7 +29,13 @@ object ValidationJob {
     * violation sink. */
   def run(df: DataFrame, schema: SchemaIR, keyCols: Seq[String],
           nParts: Int = 256)(
-      implicit ctx: SchemaCompiler.Ctx = SchemaCompiler.Ctx()): Result = {
+      implicit ctx: SchemaCompiler.Ctx = SchemaCompiler.Ctx()): Result =
+    validate(withPartId(df, keyCols, nParts, None), schema, keyCols)
+
+  /** Adds the `part_id` lineage column: `partIdOf`, else
+    * pmod(xxhash64(first key), nParts). */
+  private def withPartId(df: DataFrame, keyCols: Seq[String], nParts: Int,
+                         partIdOf: Option[Column]): DataFrame = {
     // part_id is this job's bookkeeping column in every output (verdicts,
     // manifest, violation rows) — silently REPLACING a caller column of
     // that name would corrupt both their data and the lineage, so the
@@ -37,8 +43,15 @@ object ValidationJob {
     require(!df.columns.contains("part_id"),
       "input already has a part_id column — rename it; part_id is the " +
         "validation job's partition-lineage column")
-    val withPart = df.withColumn("part_id",
-      F.pmod(F.xxhash64(F.col(keyCols.head)), F.lit(nParts.toLong)))
+    df.withColumn("part_id", partIdOf.getOrElse(
+      F.pmod(F.xxhash64(F.col(keyCols.head)), F.lit(nParts.toLong))))
+  }
+
+  /** Per-row verdicts, the per-partition verdict aggregate and the
+    * violation rows of a `part_id`-carrying input. */
+  private def validate(withPart: DataFrame, schema: SchemaIR,
+                       keyCols: Seq[String])(
+      implicit ctx: SchemaCompiler.Ctx): Result = {
     val flagged = SchemaCompiler.validateDF(schema, withPart, "valid",
       exclude = Set("part_id"))
     val verdicts = flagged.groupBy("part_id").agg(
@@ -87,27 +100,15 @@ object ValidationJob {
     // default partitioner: engine-native xxhash64 (fast); pass a portable
     // md5-derived Column (e.g. pmod(TextOps.h32(url), n)) when the
     // manifest must be reproducible by another engine (the oracle gate)
-    require(!df.columns.contains("part_id"),
-      "input already has a part_id column — rename it; part_id is the " +
-        "validation job's partition-lineage column")
-    val withPart = df.withColumn("part_id", partIdOf.getOrElse(
-      F.pmod(F.xxhash64(F.col(keyCols.head)), F.lit(nParts.toLong))))
+    val withPart = withPartId(df, keyCols, nParts, partIdOf)
     val done = completedPartitions(spark, dir, runId)
     val todo = withPart.join(F.broadcast(done), Seq("part_id"), "left_anti")
 
-    val flagged = SchemaCompiler.validateDF(schema, todo, "valid",
-      exclude = Set("part_id"))
-    val verdicts = flagged.groupBy("part_id").agg(
-      F.count(F.lit(1)).as("rows"),
-      F.sum(F.when(F.col("valid"), 1L).otherwise(0L)).as("valid_rows"),
-      F.min(F.col("valid")).as("pass"))
+    val job = validate(todo, schema, keyCols)
+    val verdicts = job.verdicts
       .withColumn("run_id", F.lit(runId))
       .withColumn("committed_at", F.current_timestamp())
-
-    val violations = SchemaCompiler
-      .violationsDF(schema, todo, keyCols :+ "part_id",
-        exclude = Set("part_id"))
-      .withColumn("run_id", F.lit(runId))
+    val violations = job.violations.withColumn("run_id", F.lit(runId))
 
     // violations first, manifest second: the manifest row is the COMMIT
     // point. A crash between the two leaves orphaned violation rows for

@@ -1,6 +1,6 @@
 package mallispark
 
-import org.apache.spark.sql.{functions => F, Row}
+import org.apache.spark.sql.{DataFrame, functions => F, Row}
 import org.apache.spark.sql.types._
 import mallispark.ir.{S, SchemaIR}
 import mallispark.ir.SchemaIR._
@@ -158,6 +158,50 @@ class DeepNestSpec extends SparkSuite {
       hatch.zip(generic).zipWithIndex.foreach { case ((h, g), i) =>
         assert(errSet(h) === errSet(g), s"row $i errors diverge")
       }
+    }
+  }
+
+  // the hatch renders a timestamp inside a container value like to_json:
+  // ISO-8601 with the SESSION zone's offset, not a hard-coded "Z"
+  test("hatch timestamp values follow a non-UTC session zone") {
+    import scala.jdk.CollectionConverters._
+    def sch(d: Int): SchemaIR =
+      if (d == 0) S.mapE(true, S.req("leaf", S.int(0L, 100L)))
+      else S.mapE(false, S.req("leaf", S.int(0L, 100L)),
+        S.req("kid", sch(d - 1)))
+    def dt(d: Int): DataType =
+      if (d == 0) StructType(Seq(StructField("leaf", LongType),
+        StructField("strayrec", StructType(Seq(
+          StructField("t", TimestampType))))))
+      else StructType(Seq(StructField("leaf", LongType),
+        StructField("kid", dt(d - 1))))
+    val ts = java.sql.Timestamp.from(
+      java.time.Instant.parse("2024-03-05T12:34:56.250Z"))
+    def v(d: Int, x: Long): Any =
+      if (d == 0) Row(x, Row(ts)) else Row(x, v(d - 1, x))
+    val D = 11 // past the errors threshold: explainDF rides the hatch
+    val top = S.mapE(false, S.req("root", sch(D))).asInstanceOf[SMap]
+    val st = StructType(Seq(StructField("root", dt(D))))
+    val rows = (0 until 10).map(i => Row(v(D, i.toLong).asInstanceOf[Row]))
+    val tmp = java.nio.file.Files.createTempDirectory("deeptz").toString
+    spark.createDataFrame(new java.util.ArrayList[Row](rows.asJava), st)
+      .write.mode("overwrite").parquet(tmp)
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      val df = spark.read.parquet(tmp)
+      def values(e: DataFrame) = e.collect().toSeq.flatMap(
+        _.getSeq[Row](0).filter(_.getString(2) == ErrorKeys.ExtraKey)
+          .map(_.getString(3)))
+      val hatch = values(SchemaCompiler.explainDF(top, df, "e")
+        .select(F.col("e")))
+      val generic = values(df.select(SchemaCompiler.errors(top,
+        F.struct(F.col("root")), st, "", F.lit("")).as("e")))
+      assert(hatch.size === rows.size)
+      assert(hatch === generic)
+      assert(hatch.head === """{"t":"2024-03-05T04:34:56.250-08:00"}""")
+    } finally {
+      spark.conf.set("spark.sql.session.timeZone", "UTC")
+      rmTree(tmp)
     }
   }
 
